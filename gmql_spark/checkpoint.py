@@ -12,6 +12,16 @@ Driver-side work is O(#buckets) JSON bookkeeping; all data work stays in
 Spark jobs. At scale each bucket job prunes to its partition via the
 storage layout (`bucket=` dirs / Iceberg bucket transform) instead of
 scanning the full input.
+
+Per bucket, every tier is a direct fused rollup of the bucket's raw rows
+(``operators.rollup.rollup_all_tiers``): one raw scan and one
+exchange+sort+aggregate per tier, with no tier-to-tier cascade and no
+percentile join.
+The tiers are independent, so each tier's write (then its Gorilla write)
+runs as one chain on its own driver thread; driver-side costs of one
+chain (analysis, AQE replanning, codegen) overlap with the execution of
+the others. ``rows_in``/``watermark`` are observed on the first tier's
+write (``DataFrame.observe``), so the manifest costs no extra job.
 """
 
 from __future__ import annotations
@@ -20,8 +30,10 @@ import json
 import os
 import time
 from collections.abc import Callable, Sequence
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import InheritableThread
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -38,6 +50,32 @@ def _parquet_stats(path: str) -> tuple[int, int]:
                 rows += pq.ParquetFile(fp).metadata.num_rows
                 size += os.path.getsize(fp)
     return rows, size
+
+
+def _run_concurrently(spark: SparkSession, chains: Sequence[Callable[[], None]]) -> None:
+    """Run every chain on its own driver thread and wait for all of them.
+
+    The threads are ``InheritableThread``s: each starts with a copy of the
+    caller's local properties (job group, description, scheduler pool), so
+    the jobs it submits belong to the caller's job group and
+    ``cancelJobGroup`` still stops them. Once every chain has returned,
+    the first failure in chain order is re-raised."""
+    errors: list[BaseException | None] = [None] * len(chains)
+
+    def guard(i: int) -> None:
+        try:
+            chains[i]()
+        except BaseException as ex:  # re-raised on the caller's thread
+            errors[i] = ex
+
+    threads = [InheritableThread(guard, args=(i,), session=spark) for i in range(len(chains))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for ex in errors:
+        if ex is not None:
+            raise ex
 
 
 class Manifest:
@@ -110,10 +148,20 @@ def run_pipeline(
     after N buckets (test hook for kill/resume equivalence).
     ``compress=True`` additionally writes Gorilla-packed streams of each
     tier's turn_count series (``gorilla_<tier>/bucket=<b>``: delta-of-
-    delta timestamps + XOR values, north-rule storage codec).
+    delta timestamps + XOR values, north-rule storage codec), encoded
+    from the tier as written.
+
+    Within a bucket each tier is rolled up directly from the bucket's raw
+    rows, and the tiers' write chains run concurrently on ``len(tiers)``
+    driver threads that inherit the caller's job group. The bucket's
+    manifest entry is appended only after every chain has returned; if a
+    chain fails, its error is re-raised and the bucket stays undone, so a
+    rerun rebuilds it.
     """
     if raw is None and raw_path is None:
         raise ValueError("provide raw (DataFrame) or raw_path (bucketed table)")
+    if not tiers:
+        raise ValueError("tiers must name at least one tier")
     if raw_path is not None:
         # the job's bucket range must cover the table's layout, or high
         # buckets would silently never be processed
@@ -134,6 +182,9 @@ def run_pipeline(
                 "written with"
             )
 
+    from gmql_spark.compression.gorilla import compress_series
+    from gmql_spark.operators.rollup import rollup_all_tiers
+
     manifest = Manifest(f"{out_dir}/_manifest.jsonl")
     done = manifest.done_buckets(n_buckets=n_buckets)
     ran = skipped = 0
@@ -152,54 +203,43 @@ def run_pipeline(
             part = read_transcripts(spark, raw_path, buckets=[b])
         else:
             part = raw.filter(F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)) == b)
-        meta = part.agg(
-            F.count(F.lit(1)).alias("rows_in"), F.max(ts).alias("watermark")
-        ).collect()[0]
-        # each tier is written, then the NEXT tier cascades from the
-        # written parquet (storage-backed lineage — no recomputation of
-        # the finer tier inside the coarser tier's job, and the
-        # manifest's lineage is literally the bytes on disk)
-        from gmql_spark.operators.rollup import (
-            rollup,
-            rollup_tier_from,
-            with_gap_seconds,
+        # rows_in/watermark ride the first tier's write as observed
+        # metrics, so the manifest needs no scan of its own
+        built = rollup_all_tiers(part, tiers, key=key, ts=ts)
+        meta = Observation()
+        built[tiers[0]] = built[tiers[0]].observe(
+            meta,
+            F.coalesce(F.sum("turn_count"), F.lit(0)).alias("rows_in"),
+            F.max("last_ts").alias("watermark"),
         )
+        tier_stats: dict[str, dict] = {tier: {} for tier in tiers}
 
-        spark = part.sparkSession
-        raw_g = with_gap_seconds(part, key=key, ts=ts)
-        tier_stats = {}
-        prev_df = None
-        for tier in tiers:
+        def build_tier(tier: str) -> None:
             path = f"{out_dir}/rollup_{tier}/bucket={b}"
-            if prev_df is None:
-                df = rollup(raw_g, tier, key=key, ts=ts, with_gaps=False)
-            else:
-                df = rollup_tier_from(prev_df, raw_g, tier, key=key, ts=ts, with_gaps=False)
-            df.write.mode("overwrite").parquet(path)
-            prev_df = spark.read.parquet(path)
+            built[tier].write.mode("overwrite").parquet(path)
             rows, nbytes = _parquet_stats(path)
-            tier_stats[tier] = {"rows_out": rows, "bytes": nbytes}
+            tier_stats[tier].update(rows_out=rows, bytes=nbytes)
             if compress:
-                from pyspark.sql import functions as SF
-
-                from gmql_spark.compression.gorilla import compress_series
-
+                # the Gorilla pass reads the written tier back: the
+                # stream encodes exactly the bytes on disk
                 gpath = f"{out_dir}/gorilla_{tier}/bucket={b}"
-                series = prev_df.select(
-                    key, "window_start", SF.col("turn_count").cast("double").alias("val")
+                series = spark.read.parquet(path).select(
+                    key, "window_start", F.col("turn_count").cast("double").alias("val")
                 )
-                compress_series(series, keys=[key], ts_col="window_start", value_col="val").write.mode(
-                    "overwrite"
-                ).parquet(gpath)
-                _g_rows, g_bytes = _parquet_stats(gpath)
-                tier_stats[tier]["gorilla_bytes"] = g_bytes
+                compress_series(
+                    series, keys=[key], ts_col="window_start", value_col="val"
+                ).write.mode("overwrite").parquet(gpath)
+                tier_stats[tier]["gorilla_bytes"] = _parquet_stats(gpath)[1]
+
+        _run_concurrently(spark, [partial(build_tier, tier) for tier in tiers])
+        observed = meta.get
         entry = {
             "bucket": b,
             "n_buckets": n_buckets,
             "status": "done",
             "source": raw_path or "<dataframe>",
-            "rows_in": meta.rows_in,
-            "watermark": meta.watermark,
+            "rows_in": observed["rows_in"],
+            "watermark": observed["watermark"],
             "tiers": tier_stats,
             "lineage": lineage,
             "wall_s": round(time.time() - t0, 3),

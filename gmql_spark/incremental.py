@@ -348,7 +348,9 @@ def refresh_tiers(
 
     Every window of every tier lies inside one UTC date, and the stored
     ``gap_us`` makes each window's stats independent of other dates —
-    so per-date recompute is exact. ``with_sketches=True`` maintains the
+    so per-date recompute is exact. Without sketches every tier is
+    rolled up directly from the date-pruned raw (the same builder as
+    ``checkpoint.run_pipeline``). ``with_sketches=True`` maintains the
     mergeable sketch columns too: the finest tier computes them from
     raw and the cascade carries them up automatically (they are
     mergeable AND per-date independent — same argument). The DEFAULT
@@ -358,8 +360,8 @@ def refresh_tiers(
     sketch-less partitions (mixed parquet schemas read back
     nondeterministically); an EXPLICIT value that contradicts the
     existing tables raises instead."""
-    from gmql_spark.operators.rollup import rollup, rollup_tier_from
-
+    from gmql_spark.checkpoint import _parquet_stats
+    from gmql_spark.operators.rollup import rollup, rollup_all_tiers, rollup_tier_from
     from gmql_spark.realtime import record_refresh_watermark
 
     existing_modes = {}
@@ -404,28 +406,36 @@ def refresh_tiers(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     stats = {}
     try:
+        # without sketches every tier is a direct fused rollup of the
+        # date-pruned raw: raw carries the stored gap_us, so no tier needs
+        # the finer one. Sketch columns are mergeable carriers that ride
+        # the cascade from the finer tier as written.
+        direct = None if with_sketches else rollup_all_tiers(raw, tiers, key=key, ts=ts)
         prev_df = None
         for tier in tiers:
             path = f"{out_dir}/rollup_{tier}"
-            # with_gaps=True is the idempotent path here: raw carries the
-            # stored gap_us, so with_gap_seconds only derives gap_s — no
-            # raw-scale window shuffle
-            if prev_df is None:
+            if direct is not None:
+                df = direct[tier]
+            elif prev_df is None:
+                # with_gaps=True is the idempotent path here: raw carries
+                # the stored gap_us, so with_gap_seconds only derives
+                # gap_s — no raw-scale window shuffle
                 df = rollup(
                     raw, tier, key=key, ts=ts, with_gaps=True,
                     with_sketches=with_sketches,
                 )
             else:
-                # sketch columns ride the cascade from the finer tier
                 df = rollup_tier_from(prev_df, raw, tier, key=key, ts=ts, with_gaps=True)
             out = df.withColumn("window_date", F.to_date("window_start"))
             out.write.mode("overwrite").partitionBy("window_date").parquet(path)
-            prev_df = (
-                spark.read.parquet(path)
-                .filter(F.col("window_date").isin(dates))
-                .drop("window_date")
-            )
-            stats[tier] = prev_df.count()
+            if direct is None:
+                prev_df = (
+                    spark.read.parquet(path)
+                    .filter(F.col("window_date").isin(dates))
+                    .drop("window_date")
+                )
+            # rows of the refreshed dates, from the parquet footers
+            stats[tier] = sum(_parquet_stats(f"{path}/window_date={d}")[0] for d in dates)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
     # realtime watermark: the refreshed dates now reflect every raw row

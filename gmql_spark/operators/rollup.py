@@ -16,13 +16,18 @@ Scale notes:
   conv_id (catalog.write_transcripts), the first shuffle reads
   co-located data.
 - percentiles are exact, computed per tier from the raw gap column via
-  a rank + hash-agg plan (NOT the built-in ``percentile`` aggregate,
-  whose ObjectHashAggregate falls back to sort-based object aggregation
-  past 128 groups/partition — see ``percentiles_for_tier``); all other
-  stats cascade tier→tier (see ``cascade_rollup``) so the 1h/1d jobs
-  read the much smaller 1m tier for mergeable stats. At 100 TB raw /
-  ~1 TB of 1m points this is the difference between re-scanning raw
-  three times and once.
+  a rank + hash-agg plan fused into the tier's aggregate (NOT the
+  built-in ``percentile`` aggregate, whose ObjectHashAggregate falls
+  back to sort-based object aggregation past 128 groups/partition).
+  The exact-percentile contract forces one raw-scale pass per tier, so
+  without sketches every tier is a direct ``rollup`` of raw — the one
+  tier builder behind ``rollup_all_tiers``, ``checkpoint.run_pipeline``
+  and ``incremental.refresh_tiers``.
+- ``rollup_tier_from`` (``cascade_rollup`` of the finer tier ⨝
+  ``percentiles_for_tier`` from raw) now serves only the sketch cascade
+  (sketch columns are mergeable carriers, rebuilt tier→tier) and the
+  differential tests; ``cascade_rollup`` alone also backs the GSL and
+  job-spec ``cascade`` steps.
 """
 
 from __future__ import annotations
@@ -421,7 +426,9 @@ def cascade_rollup(
 def percentiles_for_tier(
     raw: DataFrame, tier: str, key: str = "conv_id", ts: str = "ts", with_gaps: bool = True
 ) -> DataFrame:
-    """Exact latency percentiles at a tier's grain, from raw gaps.
+    """Exact latency percentiles at a tier's grain, from raw gaps — the
+    percentile half of ``rollup_tier_from`` (sketch cascade and tests;
+    ``rollup`` fuses the same rank pass into its aggregate).
 
     Implemented as sort + rank + plain hash aggregate, NOT Spark's
     ``percentile`` aggregate: the built-in is a TypedImperativeAggregate
@@ -558,7 +565,9 @@ def rollup_tier_from(
     tool_values: Sequence[str] | None = None,
 ) -> DataFrame:
     """Full coarser-tier rollup = cascade(mergeables from finer tier)
-    ⨝ exact percentiles from raw. The join keys are (key, window_start)
+    ⨝ exact percentiles from raw. Used by the sketch cascade only (and
+    tests): without sketches a direct ``rollup`` of raw is the cheaper
+    plan for every tier. The join keys are (key, window_start)
     at identical grain, both sides already hash-partitioned by the
     aggregate — Catalyst plans a shuffle-free sort-merge or reuses the
     exchange under AQE. Known category domains
